@@ -32,7 +32,6 @@ def entry(spark: SparkSession) -> DataFrame:
         seeds=seeds,
         follow_patterns=[r"site\d+\.test"],
         max_requests_per_host=64,
-        bloom_bits=1 << 16,
         max_rounds=12,
     )
     store = CheckpointStore(tempfile.mkdtemp(prefix="acrawler_entry_"), spark)

@@ -1,4 +1,4 @@
-from acrawler_spark.operators.dedup import BloomSidecar, admit_new_candidates  # noqa: F401
+from acrawler_spark.operators.dedup import admit_new_candidates  # noqa: F401
 from acrawler_spark.operators.politeness import apply_host_budgets  # noqa: F401
 from acrawler_spark.operators.frontier import (  # noqa: F401
     FRONTIER_SCHEMA,

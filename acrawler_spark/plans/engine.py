@@ -10,16 +10,20 @@ task (crawler.py:61-136), quantized to a logical clock:
     -> handler middleware (family-scoped), skip/defer flags [middleware]
     -> Arrow UDF: decode + absolutize + links               [parse]
     -> explode links -> canonicalize+fingerprint (JVM)      [follow]
-    -> within-round dedup + Bloom + anti-join seen          [dupefilter]
+    -> within-round dedup + exact anti-join seen            [dupefilter]
     -> retry / recrawl / defer branches                     [lifecycle]
     -> commit as one snapshot                               [persistence]
 
-Steady-state round = exactly THREE Spark jobs: (1) pages stage (fetch join
-+ parse + counters via observe), (2) seen delta with the Bloom build fused
-into its write, (3) frontier rewrite as a broadcast anti-join (windows run
-once) carrying next-round due stats in the manifest. items / fetch_log /
-failed are virtual projections of the pages delta (plans/views.py);
-metrics materialize once per crawl from the manifest.
+A round's actions are the pages stage (fetch join + parse + counters via
+observe), the admitted-cache count, the seen delta and the frontier rewrite
+(a broadcast anti-join, windows run once, carrying next-round due stats in
+the manifest); items / fetch_log / failed are virtual projections of the
+pages delta (plans/views.py) and metrics materialize once per crawl from
+the manifest. Each action is several Spark jobs: AQE submits every shuffle
+stage of a query as its own job, and the prepare (politeness selection),
+miss-check and items jobs come on top, so the crawl benchmark's traced run
+counts 22.5 (bulk) to 37 (polite) jobs per round
+(`plans.engine.jobs_per_round`).
 
 Determinism contract (tests/oracle.py mirrors it 1:1): logical clock
 now = t0 + round; total order (priority DESC, exetime ASC, fingerprint ASC);
@@ -36,7 +40,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from acrawler_spark.functions.udfs import make_parse_page_udf
-from acrawler_spark.operators.dedup import BloomSidecar, admit_new_candidates
+from acrawler_spark.operators.dedup import admit_new_candidates, dedupe_within_round
 from acrawler_spark.operators.frontier import (
     FRONTIER_SCHEMA,
     candidates_from_links,
@@ -73,8 +77,8 @@ class CrawlConfig:
     max_depth: int | None = None
     max_rounds: int = 1000
     t0: float = 1767225600.0  # logical epoch base (FIXTURES.md)
-    use_bloom: bool = True
-    bloom_buckets: int = 16
+    # accepted and ignored: the seen set is exact (a left-anti join), there
+    # is no Bloom prefilter to size; kept so existing callers still construct
     bloom_bits: int = 1 << 20
     salt_n: int = 4
     record_rank: bool = True  # per-round global rank in fetch_log (order-parity tests)
@@ -241,11 +245,6 @@ class CrawlEngine:
         self.spark = spark
         self.cfg = cfg
         self.store = store
-        self.bloom = (
-            BloomSidecar(store.root + "/seen/_bloom", cfg.bloom_buckets, cfg.bloom_bits)
-            if cfg.use_bloom
-            else None
-        )
         self._parse_udf = make_parse_page_udf(cfg.links_to_abs, cfg.follow_patterns)
         if cfg.seeds_inbox:
             from acrawler_spark.streaming.seeds import SeedFeeder
@@ -330,8 +329,6 @@ class CrawlEngine:
         seeds = seeds_frontier(
             self.spark, cfg.seeds, cfg.t0, cfg.seed_priority, cfg.seed_recrawl
         )
-        from acrawler_spark.operators.dedup import dedupe_within_round
-
         seeds = dedupe_within_round(seeds)
         # position 0 = on_start (middleware.py:129-137): transform the seed
         # frontier before the round-0 commit
@@ -345,9 +342,7 @@ class CrawlEngine:
         seen0 = self.store.read_frontier(0).select(
             "fingerprint", F.lit(0).alias("added_round")
         )
-        if self.bloom is not None:
-            seen0 = self.bloom.updating_scan(seen0)
-        self.store.write_delta("seen", 0, seen0, cap=self.bloom is None)
+        self.store.write_delta("seen", 0, seen0)
         self.store.commit_round(
             0,
             {"phase": "bootstrap", "seeds": len(cfg.seeds),
@@ -686,7 +681,7 @@ class CrawlEngine:
         if self.feeder is not None and prep is None:
             inbox_df, inbox_files, inbox_n = self.feeder.drain(rnd, now)
             if inbox_df is not None:
-                new_seed_rows = admit_new_candidates(inbox_df, seen, self.bloom).persist()
+                new_seed_rows = admit_new_candidates(inbox_df, seen).persist()
                 frontier = frontier.unionByName(new_seed_rows.select(*frontier.columns))
         # a huge external seed drop must not be force-broadcast anywhere:
         # the hint on new_seed_rows (candidate dedupe below) is proven only
@@ -842,7 +837,7 @@ class CrawlEngine:
             candidates = candidates_from_links(
                 link_src, rnd, now, cfg.child_priority, cfg.max_depth
             )
-            admitted = admit_new_candidates(candidates, seen, self.bloom)
+            admitted = admit_new_candidates(candidates, seen)
             if new_seed_rows is not None:
                 # frontier invariant: at most one row per fingerprint (the
                 # rewrite below is an anti-join on fingerprint). Candidates
@@ -896,11 +891,9 @@ class CrawlEngine:
         )
 
         # -- commit (staged writes, then atomic manifest bump) ----------------
-        # Per-round job budget (VERDICT r1 scaling fix): exactly THREE Spark
-        # jobs in the steady state — pages stage, seen (+Bloom fused),
-        # frontier — and the seen/frontier jobs (plus optional spec-items /
-        # lineage) are SUBMITTED CONCURRENTLY from driver threads, so their
-        # per-stage scheduling latencies overlap instead of serializing.
+        # The seen/frontier writes (plus optional spec-items / lineage) are
+        # SUBMITTED CONCURRENTLY from driver threads, so their per-stage
+        # scheduling latencies overlap instead of serializing.
         # items/fetch_log/failed are virtual projections of the pages delta;
         # every counter rides a write via observe(); nothing is counted with
         # a standalone action.
@@ -935,10 +928,8 @@ class CrawlEngine:
         )
 
         def _seen_job() -> int:
-            # seen delta + Bloom maintenance fused into one write job; the
-            # admitted cache materializes here (or in the concurrent
-            # frontier job — RDD cache locking makes that safe) and is
-            # shared. Schedule-time semantics: seen grows in the same
+            # seen delta: a plain JVM write of the hot admitted cache (no
+            # Python stage). Schedule-time semantics: seen grows in the same
             # commit that admits the rows (scheduler.py:45-50).
             if not (cfg.follow_patterns or new_seed_rows is not None):
                 return 0
@@ -964,10 +955,8 @@ class CrawlEngine:
                 F.count(F.lit(1)).alias("n"),
                 F.sum("_is_seed").alias("n_seed"),
             ).drop("_is_seed")
-            if self.bloom is not None:
-                new_seen = self.bloom.updating_scan(new_seen)
-            with self._job(f"r{rnd} seen: dedup+bloom+write (materializes admitted)"):
-                self.store.write_delta("seen", rnd, new_seen, cap=self.bloom is None)
+            with self._job(f"r{rnd} seen: delta write"):
+                self.store.write_delta("seen", rnd, new_seen)
             got = obs_seen.get
             return int(got["n"] or 0) - int(got["n_seed"] or 0)
 
@@ -995,7 +984,7 @@ class CrawlEngine:
             # the (hot) selected cache, and the written pages delta — never
             # `admitted` — so it runs CONCURRENTLY with the seen job instead
             # of serializing behind it; the admitted branch appends after
-            # (its cache is materialized by the seen write).
+            # (its cache is materialized by the admitted count job).
             new_frontier, obs = _frontier_obs(core_union)
             with self._job(f"r{rnd} frontier core: anti-join + re-entries write"):
                 self.store.write_frontier(rnd, new_frontier)
@@ -1034,18 +1023,14 @@ class CrawlEngine:
         # cold cache makes every task of one convoy on the other's
         # BlockInfoManager write-locks while it computes the same
         # partitions (event-log evidence at local[16], bench round 1: two
-        # identical 32-task stages — candidates Window + Bloom MapInPandas
-        # + Union lineage — 448 task-seconds of run time against 49 CPU-
-        # seconds, ~90% lock-wait). The materializing job is the seen-delta
-        # write itself (it consumes admitted at full parallelism below the
-        # bucket repartition, so the cache fills exactly where a standalone
-        # count() would have filled it) — one serial barrier job less per
-        # round than the previous count()-then-write ordering; the other
-        # writers then race only on cheap cache reads.
+        # identical 32-task stages, 448 task-seconds of run time against 49
+        # CPU-seconds, ~90% lock-wait). The materializing job is a count()
+        # of the admitted cache; the seen write and the frontier append then
+        # race only on cheap cache reads.
         tick("commit_dag_build")  # py4j plan construction since misses tick
         with ThreadPoolExecutor(max_workers=6) as pool:
             # ONE job materializes the admitted cache (the expensive admit
-            # pipeline: candidates agg + Bloom probe + anti-join); the seen
+            # pipeline: candidates agg + seen anti-join); the seen
             # write and the frontier append then consume a hot cache.
             # items/lineage/frontier-core read only the pages delta, the
             # selected cache, and the prior frontier (all hot/materialized
@@ -1068,7 +1053,7 @@ class CrawlEngine:
             if cfg.detailed_metrics:
                 extras.append(pool.submit(_lineage_job))
             n_adm_cached = fut_cache.result()
-            fut_seen = pool.submit(_seen_job)  # hot cache: bloom + write tail
+            fut_seen = pool.submit(_seen_job)  # hot cache: write tail
 
             # FULL next-round prefetch: admitted rows carry exetime == now,
             # so n_adm_cached > 0 proves round rnd+1 has due work — run its

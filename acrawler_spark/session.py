@@ -67,7 +67,7 @@ def get_spark(
         # under the ~4 MB socket buffer, so a pending input write always
         # completes and the thread returns to read-interest; every UDF in
         # this engine emits <= ~1 output byte per input byte (parse:
-        # text+links <= html; Bloom: passthrough+bool), bounding output
+        # text+links <= html), bounding output
         # sends the same way. The row cap is then only a backstop for
         # narrow rows, where it is the per-batch-overhead knob: the
         # previous row-only cap (64, sized for 20 KB pages) made ~100-byte

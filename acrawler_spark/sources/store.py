@@ -102,13 +102,9 @@ class CheckpointStore:
         # open/footer overhead was a serial per-round cost
         return df.hint("rebalance")
 
-    def write_delta(self, table: str, rnd: int, df: DataFrame, cap: bool = True) -> None:
-        """``cap=False`` writes the DataFrame's own partitioning verbatim —
-        used when the plan is already partition-owned (e.g. the seen delta
-        rides the Bloom bucket layout)."""
+    def write_delta(self, table: str, rnd: int, df: DataFrame) -> None:
         assert table in APPEND_TABLES, table
-        d = self._capped(df, table) if cap else df
-        d.write.mode("overwrite").parquet(self._delta_path(table, rnd))
+        self._capped(df, table).write.mode("overwrite").parquet(self._delta_path(table, rnd))
 
     def append_delta(self, table: str, rnd: int, df: DataFrame) -> None:
         """Append a second file set into an already-staged round delta

@@ -617,7 +617,13 @@ def _spread(df: DataFrame) -> DataFrame:
     (a real multi-split corpus at scale) the repartition is skipped outright:
     shuffling a wide scan DOWN to core count would pay a full-input exchange
     only to reduce parallelism. Output is partition-layout-independent either
-    way (verified old-vs-new at every test SF)."""
+    way (tests/test_round6.py runs both branches on the same rows).
+
+    Wrap only scan-level inputs (a table read, optionally filtered): the
+    partition count is read from ``df.rdd``, which plans the input on the
+    driver and, under AQE, would run any upstream shuffle stage eagerly.
+    The count is also only a proxy for balance — a wide scan whose rows a
+    filter mostly removed keeps its width but may leave few busy tasks."""
     width = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= width:
         return df

@@ -289,7 +289,6 @@ def run_crawl(spark, sf_dir: str, cpus: int) -> dict:
     cfg = CrawlConfig(
         seeds=seeds,
         follow_patterns=[r"site\d+\.test"],
-        bloom_bits=1 << 24,  # ~2M seen keys at the default corpus
         record_rank=False,  # no global-order window in the bench hot path
         detailed_metrics=False,
         max_rounds=20,
@@ -1470,8 +1469,8 @@ def _write_baseline_md(r: dict) -> None:
         "",
         f"Input: documents-derived page corpus at `{r['sf']}` "
         f"({r['urls_fetched']} URLs fetched+extracted to frontier exhaustion;",
-        "full engine path: eligibility filter, salted politeness windows, Bloom-",
-        "prefiltered seen anti-join, corpus fetch-join, Arrow decode+absolutize+",
+        "full engine path: eligibility filter, salted politeness windows, exact",
+        "seen anti-join, corpus fetch-join, Arrow decode+absolutize+",
         "link extraction, retry/recrawl branches, per-round snapshot commits).",
         "",
         "| metric | value |",

@@ -75,10 +75,10 @@ def main() -> None:
         sel,
     ))
 
-    # 4. seen anti-join (no bloom, shows the exact join)
+    # 4. seen anti-join (the exact join)
     seen = frontier.select("fingerprint").limit(4)
     cand = frontier.withColumn("discovery_idx", F.col("discovery_idx"))
-    admitted = admit_new_candidates(cand, seen, bloom=None)
+    admitted = admit_new_candidates(cand, seen)
     sections.append((
         "Candidate admission: within-round dedup window + LeftAnti join vs seen "
         "(expect: hash/broadcast anti-join on fingerprint)",

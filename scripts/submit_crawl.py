@@ -51,9 +51,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--download-delay", type=float, default=0.0)
     p.add_argument("--max-depth", type=int, default=None)
     p.add_argument("--max-tries", type=int, default=3)
-    p.add_argument("--bloom-bits", type=int, default=1 << 26)
-    p.add_argument("--bloom-buckets", type=int, default=16)
-    p.add_argument("--no-bloom", action="store_true")
     p.add_argument("--corpus-bucket-n", type=int, default=None,
                    help="corpus bucket(url) partition count for DPP (Iceberg bucket analog)")
     p.add_argument("--seeds-inbox", default=None,
@@ -113,9 +110,6 @@ def main(argv: list[str] | None = None) -> int:
         round_cap=args.round_cap,
         max_depth=args.max_depth,
         max_rounds=args.max_rounds,
-        use_bloom=not args.no_bloom,
-        bloom_buckets=args.bloom_buckets,
-        bloom_bits=args.bloom_bits,
         corpus_bucket_n=args.corpus_bucket_n,
         seeds_inbox=args.seeds_inbox,
         record_rank=args.record_rank,

@@ -14,13 +14,12 @@ from tests.oracle import OracleCrawl
 FOLLOW = [r"site\d+\.test"]  # follow only corpus hosts (excludes js/mailto/#)
 
 
-def run_both(spark, tmp_path, *, n_hosts=3, depth=2, fanout=3, use_bloom=True, **cfg_kw):
+def run_both(spark, tmp_path, *, n_hosts=3, depth=2, fanout=3, **cfg_kw):
     pages = build_fixture_pages(n_hosts=n_hosts, depth=depth, fanout=fanout)
     corpus = fixture_corpus_df(spark, n_hosts=n_hosts, depth=depth, fanout=fanout)
     seeds = seed_urls(n_hosts)
 
-    cfg = CrawlConfig(seeds=seeds, follow_patterns=FOLLOW, use_bloom=use_bloom,
-                      bloom_bits=1 << 14, **cfg_kw)
+    cfg = CrawlConfig(seeds=seeds, follow_patterns=FOLLOW, **cfg_kw)
     store = CheckpointStore(str(tmp_path / "state"), spark)
     engine = CrawlEngine(spark, cfg, store)
     history = engine.run(corpus)
@@ -114,15 +113,6 @@ def test_round_cap_matches_oracle(spark, tmp_path):
     engine, store, history, expected, _ = run_both(spark, tmp_path, round_cap=5)
     assert_match(spark, store, history, expected)
     assert all(h["selected"] <= 5 for h in history)
-
-
-def test_no_bloom_same_result(spark, tmp_path):
-    e1 = run_both(spark, tmp_path / "a", use_bloom=True)
-    e2 = run_both(spark, tmp_path / "b", use_bloom=False)
-    assert e1[3].schedule == e2[3].schedule  # same oracle
-    s1 = {r["fingerprint"] for r in e1[1].read_appended("seen").collect()}
-    s2 = {r["fingerprint"] for r in e2[1].read_appended("seen").collect()}
-    assert s1 == s2
 
 
 def test_recrawl_reenqueues(spark, tmp_path):

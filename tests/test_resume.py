@@ -2,7 +2,10 @@
 round and produces exactly the state of an uninterrupted run (SURVEY §5.4;
 reference analog: persistent crawl + shutdown put-back, crawler.py:558-638)."""
 
-import shutil
+import json
+import os
+
+import numpy as np
 
 from acrawler_spark.plans.engine import CrawlConfig, CrawlEngine
 from acrawler_spark.sources.corpus import fixture_corpus_df, seed_urls
@@ -52,16 +55,44 @@ def test_kill_and_resume_identical(spark, tmp_path):
     assert _final_state(s_resume) == _final_state(s_full)
 
 
-def test_bloom_sidecar_survives_resume(spark, tmp_path):
+def _dir_bytes(d: str) -> dict[str, bytes]:
+    out = {}
+    for n in sorted(os.listdir(d)):
+        with open(os.path.join(d, n), "rb") as f:
+            out[n] = f.read()
+    return out
+
+
+def _plant_legacy_bloom(root: str) -> dict[str, bytes]:
+    """The ``seen/_bloom/`` sidecar older versions kept next to the seen
+    deltas: meta.json + one uint64 bitmap per bucket. All-zero bitmaps are
+    the worst case — a reader that trusted them would call every
+    fingerprint new and re-admit the whole seen set."""
+    d = os.path.join(root, "seen", "_bloom")
+    os.makedirs(d)
+    with open(os.path.join(d, "meta.json"), "w") as f:
+        json.dump({"n_buckets": 4, "m_bits": 1 << 12}, f)
+    for b in range(4):
+        np.save(os.path.join(d, f"bucket_{b}.npy"), np.zeros(64, dtype=np.uint64))
+    return _dir_bytes(d)
+
+
+def test_resume_ignores_legacy_bloom_dir(spark, tmp_path):
     corpus = fixture_corpus_df(spark, n_hosts=2, depth=1, fanout=2)
-    store = CheckpointStore(str(tmp_path / "s"), spark)
-    e = CrawlEngine(spark, _cfg(), store)
-    e.bootstrap()
-    e.run_round(1, corpus)
-    # a fresh engine instance reloads the sidecar from disk and must not
-    # re-admit already-seen urls
-    e2 = CrawlEngine(spark, _cfg(), CheckpointStore(str(tmp_path / "s"), spark))
-    e2.run(corpus)
-    log = e2.store.read_appended("fetch_log")
+    s_full = CheckpointStore(str(tmp_path / "full"), spark)
+    CrawlEngine(spark, _cfg(), s_full).run(corpus)
+
+    root = str(tmp_path / "s")
+    e1 = CrawlEngine(spark, _cfg(), CheckpointStore(root, spark))
+    e1.bootstrap()
+    e1.run_round(1, corpus)
+    legacy = _plant_legacy_bloom(root)
+
+    s_resume = CheckpointStore(root, spark)
+    CrawlEngine(spark, _cfg(), s_resume).run(corpus)
+    log = s_resume.read_appended("fetch_log")
     per_url = log.groupBy("url_canon").count().filter("count > 1").count()
     assert per_url == 0  # nothing fetched twice (no recrawl configured)
+    assert _final_state(s_resume) == _final_state(s_full)
+    # never read as seen data, never rewritten
+    assert _dir_bytes(os.path.join(root, "seen", "_bloom")) == legacy

@@ -98,3 +98,36 @@ def test_simhash_token_cache_matches_direct_hashlib(spark, tmp_path):
 
     got = {r.doc_id: (r.simhash_hi, r.simhash_lo) for r in q_dedup_simhash(spark, sf).collect()}
     assert got == {d: ref(t) for d, t in rows}
+
+
+def test_spread_skip_branch_matches_repartition_branch(spark, tmp_path):
+    """_spread passes a scan through untouched when it already has at least
+    defaultParallelism partitions, and round-robins a narrower one. The
+    queries it feeds must not depend on which branch ran."""
+    from acrawler_spark.textops import (
+        _spread,
+        q_ann_lsh_buckets,
+        q_dedup_embedding_pairs,
+        q_embedding_topk,
+    )
+
+    width = spark.sparkContext.defaultParallelism
+    rows = [
+        (i, [float(((i * 7 + j * 3) % 11) - 5) for j in range(8)]) for i in range(40)
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    narrow, wide = str(tmp_path / "narrow"), str(tmp_path / "wide")
+    emb.coalesce(1).write.parquet(f"{narrow}/embeddings.parquet")
+    # one small file per partition: each becomes its own scan split
+    emb.repartition(2 * width).write.parquet(f"{wide}/embeddings.parquet")
+
+    narrow_scan = spark.read.parquet(f"{narrow}/embeddings.parquet")
+    wide_scan = spark.read.parquet(f"{wide}/embeddings.parquet")
+    assert wide_scan.rdd.getNumPartitions() >= width
+    assert _spread(wide_scan) is wide_scan  # skip branch
+    assert _spread(narrow_scan) is not narrow_scan  # repartition branch
+
+    for q in (q_embedding_topk, q_ann_lsh_buckets, q_dedup_embedding_pairs):
+        got_narrow = sorted(q(spark, narrow).collect())
+        assert got_narrow, q.__name__
+        assert sorted(q(spark, wide).collect()) == got_narrow, q.__name__

@@ -64,7 +64,7 @@ def test_spark_submit_pyfiles_crawl_and_resume(spark, tmp_path):
             "--corpus", corpus_dir, "--store", store,
             "--seeds-file", str(seeds_file),
             "--follow-pattern", r"site\d+\.test",
-            "--bloom-bits", str(1 << 14), "--max-rounds", "10"]
+            "--max-rounds", "10"]
     # cwd far from the repo: only the zip can provide the package
     r1 = _submit(base, cwd=str(tmp_path))
     assert r1["resumed_from_round"] == -1
